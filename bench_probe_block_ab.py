@@ -72,7 +72,7 @@ def legacy_cap_blocks(blocks, cfg, id_col="record_id"):
     )
 
 
-def legacy_candidate_pairs(blocks, cfg, id_col="record_id", stats=None, emit="all"):
+def legacy_candidate_pairs(blocks, cfg, id_col="record_id", stats=None):
     blocks = blocks.drop("_bsize")
     stats = blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_size"))
     hot_keys = F.broadcast(

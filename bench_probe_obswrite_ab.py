@@ -60,16 +60,7 @@ def run_legacy():
     df_pending = df.where(F.col("part_id").isin(pending))
     pipe.catalog.write(df_pending, "scores", mode="overwrite", partition_by=["part_id"], dynamic=True)
     written = pipe.catalog.read("scores").where(F.col("part_id").isin(pending))
-    first_col = [c for c in written.columns if c != "part_id"][0]
-    aggs = [
-        F.count(F.lit(1)).alias("rows"),
-        F.coalesce(F.sum(F.pmod(F.xxhash64(first_col), F.lit(1_000_000_007))), F.lit(0)).alias("checksum"),
-    ]
-    stats = {int(r["part_id"]): r.asDict() for r in written.groupBy("part_id").agg(*aggs).collect()}
-    for p in pending:
-        m = stats.get(p, {"rows": 0, "checksum": 0})
-        m.pop("part_id", None)
-        MF.commit_partition(wd, "scores", p, pipe.cfg_hash, "probe_leg", m)
+    MF.commit_partition_metrics(wd, "scores", written, pending, pipe.cfg_hash, "probe_leg")
     return pipe.catalog.read("scores").count()
 
 

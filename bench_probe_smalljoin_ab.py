@@ -15,6 +15,7 @@ of the full candidate_pairs (incl. the dedupe exchange) with a noop sink.
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 
@@ -64,15 +65,16 @@ def pairs_variant(join_impl: str):
 
 def plan_shape(df) -> str:
     p = df._jdf.queryExecution().executedPlan().toString()
+    # shuffle exchanges only: \b keeps BroadcastExchange/ReusedExchange out
+    n_shuffle = len(re.findall(r"\bExchange\b", p))
     return (
-        f"Exchange={p.count('Exchange')} Sort={p.count('Sort ')} "
+        f"ShuffleExchange={n_shuffle} Sort={p.count('Sort ')} "
         f"SMJ={p.count('SortMergeJoin')} BHJ={p.count('BroadcastHashJoin')}"
     )
 
 
 for nme in ("bcast", "merge"):
-    impl = "bcast" if nme == "bcast" else "merge"
-    print(nme, plan_shape(pairs_variant(impl)), flush=True)
+    print(nme, plan_shape(pairs_variant(nme)), flush=True)
 
 walls = {"bcast": [], "merge": []}
 counts = {}

@@ -275,28 +275,6 @@ def with_tfidf_vector(
     )
 
 
-@F.pandas_udf(T.DoubleType())
-def sparse_cosine_udf(
-    idx_l: pd.Series, val_l: pd.Series, idx_r: pd.Series, val_r: pd.Series
-) -> pd.Series:
-    """Dot product of two sorted sparse L2-normalized vectors per row."""
-    out = np.zeros(len(idx_l))
-    il, vl = idx_l.to_numpy(dtype=object), val_l.to_numpy(dtype=object)
-    ir, vr = idx_r.to_numpy(dtype=object), val_r.to_numpy(dtype=object)
-    for i in range(len(out)):
-        a, b = il[i], ir[i]
-        if a is None or b is None or len(a) == 0 or len(b) == 0:
-            continue
-        a = np.asarray(a, dtype=np.int64)
-        b = np.asarray(b, dtype=np.int64)
-        _, ia, ib = np.intersect1d(a, b, assume_unique=True, return_indices=True)
-        if len(ia):
-            wa = np.asarray(vl[i], dtype=np.float64)[ia]
-            wb = np.asarray(vr[i], dtype=np.float64)[ib]
-            out[i] = float(np.dot(wa, wb))
-    return pd.Series(out)
-
-
 # --------------------------------------------------------------------------
 # Fused pair scorer: ONE Arrow round trip for both Python-side features
 # (Jaro-Winkler + sparse cosine). Within a batch, repeated string pairs
@@ -380,36 +358,6 @@ def pair_scores_udf(
     return pd.DataFrame({"jw_sim": jw, "tfidf_cos": cos})
 
 
-@F.pandas_udf(T.DoubleType())
-def jw_pairs_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Factorized batch Jaro-Winkler (same dedupe trick as pair_scores_udf)
-    for plans that compute the cosine JVM-side and only need JW from Python."""
-    n = len(a)
-    jw = np.zeros(n)
-    av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
-    pair_code: dict[tuple, int] = {}
-    code = np.full(n, -1, dtype=np.int64)
-    ua: list[str] = []
-    ub: list[str] = []
-    for i in range(n):
-        x, y = av[i], bv[i]
-        if x is None or y is None:
-            continue
-        k = (x, y)
-        c = pair_code.get(k)
-        if c is None:
-            c = len(ua)
-            pair_code[k] = c
-            ua.append(x)
-            ub.append(y)
-        code[i] = c
-    if ua:
-        uj = jaro_winkler_batch(ua, ub)
-        valid = code >= 0
-        jw[valid] = uj[code[valid]]
-    return pd.Series(jw)
-
-
 def sparse_cosine_expr(
     idx_l: Column, val_l: Column, idx_r: Column, val_r: Column
 ) -> Column:
@@ -418,7 +366,7 @@ def sparse_cosine_expr(
     over the intersection with map lookups for the weights. O(|inter| * n)
     comparisons per pair — but entirely JVM-side, so the KB-wide vectors
     never ride the Arrow transfer into the Python workers. Null/empty
-    vectors score 0.0 (same contract as the pandas kernel)."""
+    vectors score 0.0 (same contract as pair_scores_udf's tfidf_cos)."""
     inter = F.array_intersect(idx_l, idx_r)
     # Weight lookup via array_position (linear scan over attribute
     # references): zero per-element allocation. A map_from_arrays lookup

@@ -440,27 +440,11 @@ def _recommit_stage(
     n_parts: int,
     ts_col: str | None = None,
 ) -> None:
-    """Recompute per-partition manifest markers (rows/checksum/ts-range)
-    from folded data — same metric contract as ERPipeline._checkpoint_stage."""
-    first_col = [c for c in df.columns if c != "part_id"][0]
-    aggs = [
-        F.count(F.lit(1)).alias("rows"),
-        F.coalesce(
-            F.sum(F.pmod(F.xxhash64(first_col), F.lit(1_000_000_007))), F.lit(0)
-        ).alias("checksum"),
-    ]
-    if ts_col and ts_col in df.columns:
-        aggs += [
-            F.min(ts_col).cast("string").alias("min_ts"),
-            F.max(ts_col).cast("string").alias("max_ts"),
-        ]
-    stats = {
-        int(r["part_id"]): r.asDict() for r in df.groupBy("part_id").agg(*aggs).collect()
-    }
+    """Recompute per-partition manifest markers from folded data (clears the
+    stage's markers first, then commits all `n_parts`)."""
     MF.clear_stage(workdir, stage)
-    for p in range(n_parts):
-        m = stats.get(p, {"rows": 0, "checksum": 0})
-        m.pop("part_id", None)
-        MF.commit_partition(workdir, stage, p, cfg_hash, lineage, m)
+    MF.commit_partition_metrics(
+        workdir, stage, df, range(n_parts), cfg_hash, lineage, ts_col=ts_col
+    )
 
 

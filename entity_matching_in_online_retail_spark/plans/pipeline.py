@@ -118,27 +118,10 @@ class ERPipeline:
             written = self.catalog.read(stage).where(
                 F.col("part_id").isin([int(p) for p in pending])
             )
-            first_col = [c for c in written.columns if c != "part_id"][0]
-            aggs = [
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(
-                    F.sum(F.pmod(F.xxhash64(first_col), F.lit(1_000_000_007))),
-                    F.lit(0),
-                ).alias("checksum"),
-            ]
-            if ts_col and ts_col in written.columns:
-                aggs += [
-                    F.min(ts_col).cast("string").alias("min_ts"),
-                    F.max(ts_col).cast("string").alias("max_ts"),
-                ]
-            stats = {
-                int(r["part_id"]): r.asDict()
-                for r in written.groupBy("part_id").agg(*aggs).collect()
-            }
-            for p in pending:
-                m = stats.get(p, {"rows": 0, "checksum": 0})
-                m.pop("part_id", None)
-                MF.commit_partition(self.workdir, stage, p, self.cfg_hash, lineage, m)
+            MF.commit_partition_metrics(
+                self.workdir, stage, written, pending, self.cfg_hash, lineage,
+                ts_col=ts_col,
+            )
         return self.catalog.read(stage)
 
     def stage_offers(self, pages: DataFrame, use_html: bool = True) -> DataFrame:

@@ -1,8 +1,9 @@
 """SparkSession factory with scale-aware defaults.
 
-Local-mode knobs are chosen for the sandbox (single JVM, up to 32 threads,
-125 GB RAM); on a real cluster the same builder runs under spark-submit with
-the master/memory supplied externally and only the SQL confs below matter.
+Local-mode knobs are chosen for one box (single JVM, up to 32 threads, a
+driver heap sized from the box's RAM); on a real cluster the same builder
+runs under spark-submit with the master/memory supplied externally and only
+the SQL confs below matter.
 """
 
 from __future__ import annotations
@@ -10,6 +11,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_mem() -> str:
+    """$SPARK_DRIVER_MEM, else 40% of physical RAM (MemTotal), whole GiB.
+
+    In local mode the driver JVM hosts every task, and its RSS grows well
+    past -Xmx (off-heap shuffle/Arrow buffers, metaspace, code cache) while
+    the Python workers need RAM of their own — a heap near the box's total
+    gets the JVM killed by the kernel OOM killer on a swapless box."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(total * 0.4) >> 30)}g"
 
 
 def get_spark(
@@ -47,7 +62,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )

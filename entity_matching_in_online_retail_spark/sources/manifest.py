@@ -16,7 +16,10 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from typing import Any
+from typing import Any, Iterable
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def _manifest_dir(workdir: str, stage: str) -> str:
@@ -48,6 +51,41 @@ def commit_partition(
     with open(tmp, "w") as f:
         json.dump(payload, f, sort_keys=True)
     os.replace(tmp, partition_marker_path(workdir, stage, part))  # atomic commit
+
+
+def commit_partition_metrics(
+    workdir: str,
+    stage: str,
+    df: DataFrame,
+    parts: Iterable[int],
+    config_hash: str,
+    lineage: str,
+    ts_col: str | None = None,
+) -> None:
+    """Commit one marker per partition in `parts`, with metrics computed from
+    `df` (the stage data as it landed, partitioned by part_id): row count, a
+    content checksum over the first data column and, when `ts_col` is
+    present, the min/max timestamp. A partition with no rows in `df` commits
+    rows=0, checksum=0. One codegen'd groupBy pass over `df`."""
+    first_col = [c for c in df.columns if c != "part_id"][0]
+    aggs = [
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(
+            F.sum(F.pmod(F.xxhash64(first_col), F.lit(1_000_000_007))), F.lit(0)
+        ).alias("checksum"),
+    ]
+    if ts_col and ts_col in df.columns:
+        aggs += [
+            F.min(ts_col).cast("string").alias("min_ts"),
+            F.max(ts_col).cast("string").alias("max_ts"),
+        ]
+    stats = {
+        int(r["part_id"]): r.asDict() for r in df.groupBy("part_id").agg(*aggs).collect()
+    }
+    for p in parts:
+        m = stats.get(p, {"rows": 0, "checksum": 0})
+        m.pop("part_id", None)
+        commit_partition(workdir, stage, p, config_hash, lineage, m)
 
 
 def done_partitions(workdir: str, stage: str, config_hash: str, lineage: str) -> set[int]:

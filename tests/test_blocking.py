@@ -123,26 +123,3 @@ def test_record_ids_are_full_width_no_pair_packing(spark, tiny_spark):
     # xxhash64 ids span far beyond the 32-bit packable range even on a
     # ~200-record corpus
     assert stats["lo"] < -(2**31) or stats["hi"] >= 2**31
-
-
-def test_lowest_slot_pairs_equal_all_pairs(spark, tiny_spark):
-    """Round-5 experiment (VERDICT #3): emit="lowest_slot" suppresses every
-    duplicate pair emission at join time (pair kept only from its lowest
-    colliding key slot), so its output must be (a) the exact pair SET of
-    emit="all" and (b) already distinct without any dedupe exchange."""
-    from entity_matching_in_online_retail_spark.config import DEFAULT_CONFIG
-    from entity_matching_in_online_retail_spark.operators.normalize import (
-        normalize_web_pages,
-    )
-
-    pages, _, _ = tiny_spark
-    offers = normalize_web_pages(pages, lang="en", use_html=True).cache()
-    cfg = DEFAULT_CONFIG.blocking
-    capped = B.cap_blocks(B.all_block_keys(offers, cfg), cfg).localCheckpoint()
-    base = B.candidate_pairs(capped, cfg, emit="all")
-    low = B.candidate_pairs(capped, cfg, emit="lowest_slot")
-    n_low = low.count()
-    assert n_low == low.dropDuplicates(["id_l", "id_r"]).count()  # distinct
-    assert n_low == base.count()
-    assert low.exceptAll(base).count() == 0
-    assert base.exceptAll(low).count() == 0

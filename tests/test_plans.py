@@ -76,58 +76,35 @@ def test_scoring_plan_shape(spark, tiny_spark, tmp_path_factory):
     assert str(DEFAULT_MATCHER.coefficients[0]) in plan_of(scored, "extended")
 
 
-def test_pair_features_variants_equivalent(spark, tiny_spark):
-    """cosine_impl jvm/python and vector_fetch twin/unpivot must produce
-    identical feature rows (cosine differs only by float summation order);
-    the jvm plan computes the cosine via array_intersect with NO second
-    Python node, and the unpivot plan carries ONE vector broadcast join."""
+@pytest.fixture(scope="module")
+def feature_inputs(spark, tiny_spark):
+    """(pairs, attrs): all id pairs among 40 tiny-corpus records."""
     from entity_matching_in_online_retail_spark.operators.normalize import (
         normalize_web_pages,
     )
 
     pages, _, _ = tiny_spark
     offers = normalize_web_pages(pages, lang="en", use_html=True)
-    idf = S.fit_idf(offers)
-    attrs = FE.offers_with_vectors(offers, idf).localCheckpoint(eager=True)
+    attrs = FE.offers_with_vectors(offers, S.fit_idf(offers)).localCheckpoint(eager=True)
     ids = [r["record_id"] for r in attrs.select("record_id").limit(40).collect()]
     pairs = spark.createDataFrame(
         [(a, b) for a in ids for b in ids if a < b], "id_l long, id_r long"
     )
-    cols = ["id_l", "id_r", "jaccard", "lev_sim", "jw_sim", "tfidf_cos",
-            "price_sim", "brand_eq"]
+    return pairs, attrs
 
-    def rows(**kw):
-        df = FE.pair_features(pairs, attrs, gate_jaccard=0.15, **kw).select(cols)
-        return {
-            (r["id_l"], r["id_r"]): [round(float(r[c]), 9) for c in cols[2:]]
-            for r in df.collect()
-        }
 
-    base = rows()
-    assert base  # the gate must leave something to compare
-    for kw in ({"cosine_impl": "jvm"}, {"vector_fetch": "unpivot"},
-               {"cosine_impl": "jvm", "vector_fetch": "unpivot"}):
-        got = rows(**kw)
-        assert got == base, kw
-
+def test_pair_features_twin_plan(feature_inputs):
+    """Twin fetch: 2 light + 2 vector joins = 4, and Jaro-Winkler + cosine
+    come from exactly ONE Arrow Python node (counted strategy-agnostically:
+    AQE may print SMJ before runtime broadcast conversion depending on when
+    stats materialize)."""
     import re
 
-    jvm_plan = plan_of(
-        FE.pair_features(pairs, attrs, gate_jaccard=0.15, cosine_impl="jvm")
-    )
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", jvm_plan)) == 1
-    assert "array_intersect" in jvm_plan
-    # twin: 2 light + 2 vector joins = 4; unpivot: 2 light + 1 vector = 3
-    # (counted strategy-agnostically: AQE may print SMJ before runtime
-    # broadcast conversion depending on when stats materialize)
+    pairs, attrs = feature_inputs
+    plan = plan_of(FE.pair_features(pairs, attrs, gate_jaccard=0.15))
     join_re = r"\(\d+\) (?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin)"
-    twin_plan = plan_of(FE.pair_features(pairs, attrs, gate_jaccard=0.15))
-    unp_plan = plan_of(
-        FE.pair_features(pairs, attrs, gate_jaccard=0.15, vector_fetch="unpivot")
-    )
-    assert len(re.findall(join_re, twin_plan)) == 4
-    assert len(re.findall(join_re, unp_plan)) == 3
-    assert "Generate" in unp_plan  # the posexplode unpivot
+    assert len(re.findall(join_re, plan)) == 4
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
 
 
 def test_candidate_pairs_broadcasts_hot_keys(spark):
@@ -278,31 +255,28 @@ def test_bucketed_attrs_join_avoids_attrs_exchange(spark, tiny_spark, tmp_path):
         spark.sql("DROP DATABASE IF EXISTS buckdb")
 
 
-def test_vector_fetch_auto_follows_broadcast_regime(spark, tiny_spark):
-    """vector_fetch='auto' must resolve to the measured per-regime winner:
-    twin fetches under the broadcast threshold, the single-exchange unpivot
-    shape when broadcasts are disabled (the 10^12-record cluster regime)."""
-    from entity_matching_in_online_retail_spark.functions import similarity as S
-    from entity_matching_in_online_retail_spark.operators import features as FE
-    from entity_matching_in_online_retail_spark.operators.normalize import (
-        normalize_web_pages,
-    )
+def test_pair_features_same_rows_without_broadcast(spark, feature_inputs):
+    """The no-broadcast regime (autoBroadcastJoinThreshold=-1, the shape a
+    10^12-record cluster is in: every fetch is a shuffle join) must yield
+    the same feature rows as the default broadcast regime."""
+    pairs, attrs = feature_inputs
 
-    pages, _, _ = tiny_spark
-    offers = normalize_web_pages(pages, lang="en", use_html=True)
-    attrs = FE.offers_with_vectors(offers, S.fit_idf(offers))
-    pairs = offers.select(F.col("record_id").alias("id_l")).limit(3).crossJoin(
-        offers.select(F.col("record_id").alias("id_r")).limit(3)
-    )
-    plan_bc = plan_of(FE.pair_features(pairs, attrs))
-    assert "posexplode" not in plan_bc.lower()  # twin under broadcasts
+    def rows():
+        return sorted(
+            tuple(r) for r in FE.pair_features(pairs, attrs, gate_jaccard=0.15).collect()
+        )
+
+    base = rows()
+    assert base  # the gate must leave something to compare
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan_nobc = plan_of(FE.pair_features(pairs, attrs))
+        plan_nobc = plan_of(FE.pair_features(pairs, attrs, gate_jaccard=0.15))
+        got = rows()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-    assert "posexplode" in plan_nobc.lower()  # unpivot when nothing broadcasts
+    assert "BroadcastHashJoin" not in plan_nobc
+    assert got == base
 
 
 def test_incremental_pairs_fast_path_no_corpus_scan(spark, tiny_spark):

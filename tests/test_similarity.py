@@ -64,35 +64,46 @@ def test_token_jaccard(spark):
     assert got == pytest.approx([2 / 4, 1.0, 0.0])
 
 
-# ---- TF-IDF cosine properties ----
+# ---- TF-IDF cosine properties (the fused scorer's kernel) ----
 def test_tfidf_cosine_properties(spark):
     docs = spark.createDataFrame(
         [(1, ["red", "shoe", "nike"]), (2, ["red", "shoe", "adidas"]), (3, ["blue", "hat"])],
         "record_id long, tokens array<string>",
     )
-    idf = S.fit_idf(docs)
-    vec = S.with_tfidf_vector(docs, idf)
-    # self-cosine == 1 (L2-normalized)
-    both = vec.alias("l").join(vec.alias("r"), F.col("l.record_id") == F.col("r.record_id"))
-    self_cos = both.select(
-        S.sparse_cosine_udf(
-            F.col("l.tfidf_idx"), F.col("l.tfidf_val"),
-            F.col("r.tfidf_idx"), F.col("r.tfidf_val"),
-        ).alias("c")
-    ).collect()
-    for r in self_cos:
-        assert r["c"] == pytest.approx(1.0, abs=1e-9)
-    # disjoint docs -> 0; overlapping -> in (0,1)
-    v = {r["record_id"]: (r["tfidf_idx"], r["tfidf_val"]) for r in vec.collect()}
-    pairs = spark.createDataFrame(
-        [(list(v[1][0]), list(v[1][1]), list(v[3][0]), list(v[3][1])),
-         (list(v[1][0]), list(v[1][1]), list(v[2][0]), list(v[2][1]))],
-        "il array<long>, vl array<double>, ir array<long>, vr array<double>",
+    vec = S.with_tfidf_vector(docs, S.fit_idf(docs))
+    rows = (
+        vec.alias("l")
+        .crossJoin(vec.alias("r"))
+        .select(
+            F.col("l.record_id").alias("id_l"),
+            F.col("r.record_id").alias("id_r"),
+            F.col("l.tfidf_idx").alias("il"),
+            F.col("l.tfidf_val").alias("vl"),
+            F.col("r.tfidf_idx").alias("ir"),
+            F.col("r.tfidf_val").alias("vr"),
+        )
     )
-    got = [r["c"] for r in pairs.select(
-        S.sparse_cosine_udf("il", "vl", "ir", "vr").alias("c")).collect()]
-    assert got[0] == pytest.approx(0.0)
-    assert 0.0 < got[1] < 1.0
+    got = {
+        (r["id_l"], r["id_r"]): (r["py"], r["jvm"])
+        for r in rows.select(
+            "id_l",
+            "id_r",
+            S.pair_scores_udf(
+                F.lit("t"), F.lit("t"), "il", "vl", "ir", "vr"
+            ).getField("tfidf_cos").alias("py"),
+            S.sparse_cosine_expr(
+                F.col("il"), F.col("vl"), F.col("ir"), F.col("vr")
+            ).alias("jvm"),
+        ).collect()
+    }
+    assert len(got) == 9
+    for i in (1, 2, 3):  # self-cosine == 1 (L2-normalized)
+        assert got[(i, i)][0] == pytest.approx(1.0, abs=1e-9)
+    assert got[(1, 3)][0] == 0.0  # disjoint
+    assert 0.0 < got[(1, 2)][0] < 1.0  # overlapping
+    # the driver queries' JVM expression agrees with the scorer's kernel
+    for py, jvm in got.values():
+        assert py == pytest.approx(jvm, abs=1e-12)
 
 
 def test_idf_values(spark):
