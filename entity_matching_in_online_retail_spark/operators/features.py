@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from ..functions import similarity as S
 
-# Full column set of the checkpointed attrs table (offers_with_vectors output).
+# Full column set of the checkpointed attrs table, in offers_with_vectors
+# output order (pinned by tests/test_plans.py).
 ATTR_COLS = [
     "record_id",
     "tokens",
@@ -28,6 +29,7 @@ ATTR_COLS = [
     "title_norm",
     "brand",
     "price",
+    "n_tokens",
     "tfidf_idx",
     "tfidf_val",
 ]

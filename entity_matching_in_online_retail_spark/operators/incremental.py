@@ -6,12 +6,20 @@ documents, a crawl delivers 10^8 new ones, and re-running the full pipeline
 (10^10+ candidate pairs) for a 0.01% increment is the wrong plan. The
 incremental plan touches only work proportional to the increment:
 
-1. Block keys are computed for the UNION (old keys are recomputed here; at
-   scale they are a checkpointed stage keyed by record — read, not rebuilt),
-   but pair generation is restricted to blocks CONTAINING at least one new
-   record (left-semi on the increment's block keys), and then to pairs with
-   at least one new endpoint — old-old pairs were already scored in the run
-   that produced `old_clusters` and are represented by the contraction below.
+0. The increment-derived tables are computed ONCE: `incremental_assign`
+   materializes the increment's attribute vectors and block keys
+   (localCheckpoint) before any consumer reads them. Scoring, pair
+   generation and the caller's batch writes (plans/append.py) all read
+   those two checkpoints from `IncrementResult`; nothing re-derives them
+   from the increment's text.
+1. Old-record block keys are READ from the persisted `block_keys` artifact
+   of the run that produced `old_clusters` (`old_keys`), never recomputed:
+   the key table is restricted to blocks containing at least one new record
+   before capping (left-semi on the increment's keys), and pair generation
+   keeps only pairs with at least one new endpoint — old-old pairs were
+   already scored in that run and are represented by the contraction below.
+   Without the artifact (legacy workdirs), keys are recomputed over old ∪
+   new offers, with the same candidate set.
 2. New-record attribute vectors use the IDF fitted at the last FULL run
    (frozen vocabulary — incremental scoring must be deterministic w.r.t. the
    model lineage; vocabulary drift is handled by the pipeline's config/
@@ -53,6 +61,8 @@ from . import model as M
 class IncrementResult:
     assignments: DataFrame  # (record_id, cluster_id) for old ∪ new records
     merges: DataFrame  # (old_cluster_id, merged_into) — audit of merged clusters
+    new_attrs: DataFrame  # offers_with_vectors(new_offers, idf), checkpointed
+    new_keys: DataFrame  # all_block_keys(new_offers), checkpointed
 
 
 def incremental_pairs(
@@ -61,6 +71,7 @@ def incremental_pairs(
     cfg: PipelineConfig,
     id_col: str = "record_id",
     old_keys: DataFrame | None = None,
+    new_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs touching at least one new record.
 
@@ -81,7 +92,9 @@ def incremental_pairs(
     new-endpoint filter drops anyway — so the pair set is identical to the
     recompute path (tested in tests/test_incremental.py). The fast path does
     not touch `old_offers` at all — pass None to prove (by construction)
-    that an append plan contains no old-corpus scan.
+    that an append plan contains no old-corpus scan. `new_keys` is the
+    increment's already-materialized `all_block_keys(new_offers)`; the fast
+    path reads it instead of deriving the keys again.
     """
     new_ids = new_offers.select(id_col)
     if old_keys is None:
@@ -93,7 +106,8 @@ def incremental_pairs(
         union = old_offers.select(*cols).unionByName(new_offers.select(*cols))
         keys = B.all_block_keys(union, cfg.blocking, id_col)
     else:
-        new_keys = B.all_block_keys(new_offers, cfg.blocking, id_col)
+        if new_keys is None:
+            new_keys = B.all_block_keys(new_offers, cfg.blocking, id_col)
         # Stale rows for records being (re)resolved this batch (crash
         # recovery re-entries) are superseded by the fresh new_keys.
         old_eff = old_keys.select(id_col, "block_key").join(
@@ -138,11 +152,18 @@ def incremental_assign(
     `old_clusters`; idf is that run's fitted IDF table (frozen vocabulary);
     old_keys (optional) is that run's persisted `block_keys` artifact — when
     given, the append plan never recomputes old-record block keys.
+
+    The increment's vectors and keys are each materialized once here and
+    returned on the result, so a caller persisting them reads the same
+    checkpoints the scoring plan read.
     """
-    new_attrs = FE.offers_with_vectors(new_offers, idf)
+    new_attrs = FE.offers_with_vectors(new_offers, idf).localCheckpoint(eager=True)
+    new_keys = B.all_block_keys(new_offers, cfg.blocking).localCheckpoint(eager=True)
     attrs = old_attrs.select(*new_attrs.columns).unionByName(new_attrs)
 
-    pairs = incremental_pairs(old_offers, new_offers, cfg, old_keys=old_keys)
+    pairs = incremental_pairs(
+        old_offers, new_offers, cfg, old_keys=old_keys, new_keys=new_keys
+    )
     feats = FE.pair_features(
         pairs.select("id_l", "id_r"), attrs, gate_jaccard=cfg.scoring.gate_jaccard
     )
@@ -191,5 +212,6 @@ def incremental_assign(
         )
     )
     return IncrementResult(
-        assignments=old_out.unionByName(new_out), merges=merges
+        assignments=old_out.unionByName(new_out), merges=merges,
+        new_attrs=new_attrs, new_keys=new_keys,
     )

@@ -14,7 +14,7 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
@@ -165,6 +165,7 @@ def append_batch(
     # batch that never made it into clusters/ re-enter as part of this
     # batch; members already in clusters/ (marker-write crash window) stay
     # resolved. Missing attr/key dirs of those batches are re-derived below.
+    tagged = incoming.withColumn("_fresh", F.lit(True))
     pending = _uncommitted_batches(workdir)
     if pending:
         pend_offers = None
@@ -176,17 +177,25 @@ def append_batch(
         orphans = pend_offers.join(
             old_clusters.select("record_id"), "record_id", "left_anti"
         )
-    else:
-        orphans = incoming.limit(0)
-    new_offers = incoming.unionByName(orphans).localCheckpoint(eager=True)
+        tagged = tagged.unionByName(orphans.withColumn("_fresh", F.lit(False)))
+    # The increment is normalized exactly once: this checkpoint feeds the
+    # scoring plan and the batch writes, and its fresh/recovered counts ride
+    # the same action.
+    obs = Observation("append_increment")
+    tagged = tagged.observe(
+        obs,
+        F.count_if(F.col("_fresh")).alias("new"),
+        F.count_if(~F.col("_fresh")).alias("recovered"),
+    ).localCheckpoint(eager=True)
+    new_offers = tagged.drop("_fresh")
     new_ids = F.broadcast(new_offers.select("record_id"))
 
     resolved_offers = known_offers.join(new_ids, "record_id", "left_anti")
 
     out = {
         "base_records": resolved_offers.count(),
-        "new_records": incoming.count(),
-        "recovered_records": orphans.count(),
+        "new_records": int(obs.get["new"]),
+        "recovered_records": int(obs.get["recovered"]),
         "clusters_before": old_clusters.select("cluster_id").distinct().count(),
     }
 
@@ -201,11 +210,12 @@ def append_batch(
     # Attr/key stores: base checkpoint ∪ increments, minus rows for records
     # being (re)resolved this batch — a broadcast anti-join on the
     # increment's ids, never a corpus×corpus join.
-    vec_cols = FE.offers_with_vectors(base_offers, idf).columns
-    attrs_store = spark.read.parquet(os.path.join(workdir, "attrs")).select(*vec_cols)
+    attrs_store = spark.read.parquet(os.path.join(workdir, "attrs")).select(
+        *FE.ATTR_COLS
+    )
     inc_attrs = _read_increments(spark, workdir, "attrs")
     if inc_attrs is not None:
-        attrs_store = attrs_store.unionByName(inc_attrs.select(*vec_cols))
+        attrs_store = attrs_store.unionByName(inc_attrs.select(*FE.ATTR_COLS))
     old_attrs = attrs_store.join(new_ids, "record_id", "left_anti")
 
     old_keys = base_keys
@@ -232,18 +242,20 @@ def append_batch(
 
     # Write order is the crash contract: batch artifacts first (offers,
     # then attrs, then keys), clusters second, _COMMITTED markers last.
+    # The batch dirs hold the fresh records only; recovered ones already
+    # live in (or are healed into) their own batch's dirs.
     batch_name = None
     if out["new_records"] > 0:
+        inc_offers, inc_attrs, inc_keys = new_offers, res.new_attrs, res.new_keys
+        if out["recovered_records"] > 0:
+            inc_offers = tagged.where("_fresh").drop("_fresh")
+            fresh_ids = F.broadcast(inc_offers.select("record_id"))
+            inc_attrs = inc_attrs.join(fresh_ids, "record_id", "left_semi")
+            inc_keys = inc_keys.join(fresh_ids, "record_id", "left_semi")
         batch_name = _next_batch_name(_inc_dir(workdir, "offers"))
-        _atomic_write(incoming, _inc_dir(workdir, "offers"), batch_name)
-        _atomic_write(
-            FE.offers_with_vectors(incoming, idf),
-            _inc_dir(workdir, "attrs"), batch_name,
-        )
-        _atomic_write(
-            B.all_block_keys(incoming, cfg.blocking),
-            _inc_dir(workdir, "block_keys"), batch_name,
-        )
+        _atomic_write(inc_offers, _inc_dir(workdir, "offers"), batch_name)
+        _atomic_write(inc_attrs, _inc_dir(workdir, "attrs"), batch_name)
+        _atomic_write(inc_keys, _inc_dir(workdir, "block_keys"), batch_name)
     for b in pending:
         _heal_batch_artifacts(spark, workdir, b, idf, cfg)
 
@@ -388,12 +400,10 @@ def compact_workdir(
         # those used to build every stored attrs vector (ADVICE r4).
         # Symmetric with block_keys, which compaction materializes below.
         _atomic_write(idf, workdir, "idf")
-        idf = spark.read.parquet(os.path.join(workdir, "idf"))
-    vec_cols = FE.offers_with_vectors(base_offers.select(*OFFER_COLS), idf).columns
     folded_attrs = (
         spark.read.parquet(os.path.join(workdir, "attrs"))
-        .select(*vec_cols)
-        .unionByName(_read_increments(spark, workdir, "attrs").select(*vec_cols))
+        .select(*FE.ATTR_COLS)
+        .unionByName(_read_increments(spark, workdir, "attrs").select(*FE.ATTR_COLS))
         .withColumn("part_id", F.pmod(F.xxhash64("record_id"), F.lit(n)).cast("int"))
     )
     folded_attrs.write.mode("overwrite").partitionBy("part_id").parquet(

@@ -18,6 +18,9 @@ per-batch exclusions are broadcast anti-joins on the increment's ids) and
 the clusters overwrite — at 100 TB the latter becomes an Iceberg MERGE of
 changed rows only; the dataflow that PRODUCES assignments is already
 increment-bounded.
+Each increment-derived table is computed once per append: the normalized
+increment is checkpointed once, and its vectors and block keys once each;
+scoring and the increment's batch writes all read those checkpoints.
 
 Batch layout — appends CHAIN; each applied batch persists three artifact
 dirs plus a commit marker:

@@ -132,6 +132,32 @@ def test_append_is_o_increment(spark, chain_env, monkeypatch):
     assert max(key_input_counts) <= out["new_records"]
 
 
+def test_append_computes_increment_tables_once(spark, chain_env, monkeypatch):
+    """An append with no pending batches derives the increment's vectors and
+    block keys exactly once: scoring and the batch writes share them."""
+    cfg, wd, pages, base_pages, batch_a, batch_b, res, labeled = chain_env
+    assert RA._uncommitted_batches(wd) == []
+    calls = {"vectors": 0, "keys": 0}
+    real_vectors, real_keys = FE.offers_with_vectors, B.all_block_keys
+
+    def _counting_vectors(*a, **k):
+        calls["vectors"] += 1
+        return real_vectors(*a, **k)
+
+    def _counting_keys(*a, **k):
+        calls["keys"] += 1
+        return real_keys(*a, **k)
+
+    monkeypatch.setattr(FE, "offers_with_vectors", _counting_vectors)
+    monkeypatch.setattr(B, "all_block_keys", _counting_keys)
+
+    out = append_batch(spark, wd, batch_a.limit(5).withColumn(
+        "url", F.concat(F.col("url"), F.lit("?v=once"))
+    ), cfg)
+    assert out["new_records"] > 0 and out["recovered_records"] == 0
+    assert calls == {"vectors": 1, "keys": 1}
+
+
 def test_crash_between_increment_and_clusters_self_heals(
     spark, chain_env, tmp_path_factory
 ):
@@ -161,6 +187,29 @@ def test_crash_between_increment_and_clusters_self_heals(
     assert os.path.isdir(os.path.join(RA._inc_dir(wd, "attrs"), batch))
     assert os.path.isdir(os.path.join(RA._inc_dir(wd, "block_keys"), batch))
     assert RA._uncommitted_batches(wd) == []
+
+    # the recovering batch's dirs hold exactly its own fresh records; the
+    # recovered ones stay in the healed batch's dirs, re-derived exactly
+    def _ids(stage, b):
+        d = spark.read.parquet(os.path.join(RA._inc_dir(wd, stage), b))
+        return {r.record_id for r in d.select("record_id").distinct().collect()}
+
+    [new_batch] = [
+        b for b in RA._list_batches(RA._inc_dir(wd, "offers")) if b != batch
+    ]
+    fresh_ids = _ids("offers", new_batch)
+    assert fresh_ids and fresh_ids.isdisjoint(_ids("offers", batch))
+    assert _ids("attrs", new_batch) == fresh_ids
+    assert _ids("block_keys", new_batch) == fresh_ids
+    idf = spark.read.parquet(os.path.join(wd, "idf"))
+    healed_offers = spark.read.parquet(
+        os.path.join(RA._inc_dir(wd, "offers"), batch)
+    ).select(*RA.OFFER_COLS)
+    healed_attrs = spark.read.parquet(
+        os.path.join(RA._inc_dir(wd, "attrs"), batch)
+    ).select(*FE.ATTR_COLS)
+    want_attrs = FE.offers_with_vectors(healed_offers, idf).select(*FE.ATTR_COLS)
+    assert sorted(healed_attrs.collect()) == sorted(want_attrs.collect())
 
     healed = _labels(spark.read.parquet(os.path.join(wd, "clusters")))
     # reference: the same two appends without a crash

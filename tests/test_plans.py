@@ -93,6 +93,13 @@ def feature_inputs(spark, tiny_spark):
     return pairs, attrs
 
 
+def test_attr_cols_is_offers_with_vectors_output(feature_inputs):
+    """FE.ATTR_COLS is how stored attrs tables are read back; it must stay
+    the exact offers_with_vectors output columns, in order."""
+    _, attrs = feature_inputs
+    assert FE.ATTR_COLS == attrs.columns
+
+
 def test_pair_features_twin_plan(feature_inputs):
     """Twin fetch: 2 light + 2 vector joins = 4, and Jaro-Winkler + cosine
     come from exactly ONE Arrow Python node (counted strategy-agnostically:
